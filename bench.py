@@ -135,7 +135,7 @@ def _image_plan_seconds(spark) -> float:
     pixels.count()
 
     t0 = time.perf_counter()
-    res = run_image_plan(pixels, calib, c, barrier="local_checkpoint")
+    res = run_image_plan(pixels, calib, c)
     # the production submission order (concurrent output jobs, guide §2.6)
     # lives in ImagePlanResult.write_core_outputs — the bench merely calls
     # it (round 15, r14 verdict #3: keep the harness inert). Same timed
@@ -309,13 +309,9 @@ def _keepup_2880(batch: int = 8) -> dict:
         return time.perf_counter() - t0
 
     # calib=None: closed-form calibration columns (codegen trig per row
-    # beats broadcasting + probing an 8.3 M-row map table — SCALE.md §1);
-    # hybrid barrier: columnar pixel cache + checkpointed sparse frames.
-    # A/B'd round 3 vs "hybrid-nopx" (no dense cache, consumers recompute
-    # the column-pruned closed-form trig): hybrid 41.2 vs nopx 44.1 s/img
-    # same-session — the one-time cache build beats 6 pruned trig
-    # recomputes. Env override kept for future comparisons.
-    barrier = os.environ.get("SPARK_GRAFT_KEEPUP_BARRIER", "hybrid")
+    # beats broadcasting + probing an 8.3 M-row map table — SCALE.md §1).
+    # run_image_plan's barriers are the streaming pipeline's, so the
+    # keep-up measures the configuration that production runs.
     from concurrent.futures import ThreadPoolExecutor
 
     # ------------------------------------------------------------------
@@ -480,7 +476,7 @@ def _keepup_2880(batch: int = 8) -> dict:
                 _noop_write, cosine_similarity_series(pixels), "out:csim"
             )
             res = run_image_plan(
-                pixels, None, c, gradient_stage=True, barrier=barrier,
+                pixels, None, c, gradient_stage=True,
                 n_images=batch, h_maxima=h_maxima,
             )
             outs = [
@@ -596,7 +592,7 @@ def _keepup_2880(batch: int = 8) -> dict:
         )
         ppx.count()
         pres = run_image_plan(
-            ppx, None, pc, gradient_stage=True, barrier=barrier, n_images=1
+            ppx, None, pc, gradient_stage=True, n_images=1
         )
         # csim over the RAW pixel cache — the same plan shape one_batch
         # compiles, so the pilot pre-JITs the right generated classes
@@ -728,7 +724,7 @@ def _keepup_2880(batch: int = 8) -> dict:
                 hpx = pixels.where(cond)
                 t0 = time.perf_counter()
                 res = run_image_plan(
-                    hpx, None, c, gradient_stage=True, barrier=barrier,
+                    hpx, None, c, gradient_stage=True,
                     n_images=n_arm, h_maxima=h_on,
                 )
                 outs = [
@@ -1180,7 +1176,7 @@ def _canary_seconds(spark, cpus: int) -> float:
     comparable across rounds and across the driver's 32- vs 8-core runs.
     The probe runs once untimed (JIT) before each timed reading, and the
     timed reading is published raw — a reading far above the calm band
-    (~0.5-0.7 s on this host, r15 calibration in OPTIMIZATION_r15.md)
+    (~0.5-0.7 s on the 32-core bench host in the round-15 calibration)
     means the run's walls are weather-inflated and should be judged
     against core-normalized metrics instead. NOT added to ``value``."""
     from pyspark.sql import functions as F

@@ -1,6 +1,8 @@
 """Perf repro: full per-image plan at a parameterized detector size.
 
-Usage: python scripts/perf_image_plan.py SIZE OUT_CH OM_CH DIST [N_IMAGES] [grad|ckpt|grad-ckpt]
+Usage: python scripts/perf_image_plan.py SIZE OUT_CH OM_CH DIST [N_IMAGES] [MODE]
+MODE is a string of flags: grad (gradient stage), cf (closed-form calib),
+warm (time a second call), csim (also time csim).
 e.g.   python scripts/perf_image_plan.py 1024 1000 500 341
        python scripts/perf_image_plan.py 2880 2500 1000 959
 
@@ -61,14 +63,6 @@ def main() -> None:
     n_images = int(sys.argv[5]) if len(sys.argv) > 5 else 1
     mode = sys.argv[6] if len(sys.argv) > 6 else ""
     gradient = "grad" in mode
-    if "nopx" in mode:
-        barrier = "hybrid-nopx"
-    elif "ckpt" in mode:
-        barrier = "local_checkpoint"
-    elif "hyb" in mode:
-        barrier = "hybrid"
-    else:
-        barrier = "persist"
     closed_form = "cf" in mode  # calib=None: closed-form calib columns
 
     import os
@@ -126,7 +120,7 @@ def main() -> None:
         # wide generated methods + python worker warmup), then time the
         # second — matches the bench keepup's two-batch methodology
         warm_res = run_image_plan(pixels, calib, c, gradient_stage=gradient,
-                                  barrier=barrier, n_images=n_images)
+                                  n_images=n_images)
         for out in (warm_res.integrals, warm_res.spot_stats,
                     warm_res.spottiness):
             out.count()
@@ -134,9 +128,6 @@ def main() -> None:
             warm_res.gradient.on_arc_labels.count()
         warm_res.unpersist_all()
 
-    t0 = time.time()
-    res = run_image_plan(pixels, calib, c, gradient_stage=gradient,
-                         barrier=barrier, n_images=n_images)
     stage_t: dict[str, float] = {}
 
     def mark(name, action):
@@ -145,11 +136,12 @@ def main() -> None:
         stage_t[name] = round(time.time() - s, 2)
         return out
 
-    mark("px_persist", lambda: res.pixels.count())
-    mark("outliers", lambda: res.outliers.count())
-    mark("om_closed", lambda: res.om_pixels.count())
-    mark("labeled", lambda: res.labeled_pixels.count())
-    mark("label_table", lambda: res.label_table.count())
+    t0 = time.time()
+    # the plan call materializes every barrier (px, outliers, lpx,
+    # label_table, intspot and the gradient frames) before it returns
+    res = mark("barriers", lambda: run_image_plan(
+        pixels, calib, c, gradient_stage=gradient, n_images=n_images
+    ))
     mark("integrals", lambda: res.integrals.count())
     mark("spot_stats", lambda: res.spot_stats.count())
     mark("spottiness", lambda: res.spottiness.count())
@@ -164,7 +156,7 @@ def main() -> None:
 
     print(json.dumps({
         "size": size, "out_ch": out_ch, "om_ch": om_ch, "dist": dist,
-        "n_images": n_images, "gradient": gradient, "barrier": barrier,
+        "n_images": n_images, "gradient": gradient,
         "calib_build": round(t_calib, 2),
         "total_plan": round(total, 2), "stages": stage_t,
     }))

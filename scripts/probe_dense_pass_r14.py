@@ -69,7 +69,8 @@ def main() -> None:
     masked = with_base_mask(
         join_calib(pixels, None, broadcast=True, controls=c), controls=c
     )
-    # the production hybrid DENSE barrier: columnar persist + eager count
+    # the round-14 keep-up's dense barrier (columnar persist + eager
+    # count); run_image_plan now checkpoints px as serialized rows
     px = masked.drop(*[col for col in drop if col in masked.columns]).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -221,17 +221,13 @@ def test_observed_stage_counters_match_outputs(spark):
         calib.unpersist()
 
 
-def test_local_checkpoint_barrier_equivalent_and_released(spark):
-    """barrier='local_checkpoint' (the streaming default) produces the
-    same integrals as the persist barrier, and unpersist_all frees the
-    checkpointed RDD storage (a long-lived stream cannot wait for GC)."""
+def test_unpersist_all_releases_checkpointed_barriers(spark):
+    """unpersist_all frees the checkpointed RDD storage of every barrier
+    (a long-lived stream cannot wait for GC)."""
     img = make_image(CONTROLS, seq=3)
     pixels = images_long_df(spark, [("synth", 3, img)])
     calib = build_calib_pixels(spark, CONTROLS).cache()
-
-    res_p = run_image_plan(pixels, calib, CONTROLS, barrier="persist")
-    want = res_p.integrals.orderBy("kind", "tth_idx").toPandas()
-    res_p.unpersist_all()
+    calib.count()  # the calib cache is not the plan's to release
 
     def rdd_ids() -> set:
         return {
@@ -239,56 +235,19 @@ def test_local_checkpoint_barrier_equivalent_and_released(spark):
         }
 
     before = rdd_ids()
-    res_c = run_image_plan(pixels, calib, CONTROLS,
-                           barrier="local_checkpoint")
-    got = res_c.integrals.orderBy("kind", "tth_idx").toPandas()
-    np.testing.assert_allclose(
-        got["intensity"].values, want["intensity"].values, rtol=1e-12
-    )
-    assert list(got["kind"]) == list(want["kind"])
+    res = run_image_plan(pixels, calib, CONTROLS)
+    assert res.integrals.count() > 0
 
     assert rdd_ids() - before, "checkpointed barriers should be stored"
-    res_c.unpersist_all()
+    res.unpersist_all()
     # every checkpointed barrier frame was explicitly released (other
     # tests' unrelated caches may remain)
     assert not (rdd_ids() - before), rdd_ids() - before
     calib.unpersist()
 
 
-def test_hybrid_nopx_barrier_equivalent(spark):
-    """barrier='hybrid-nopx' (no dense pixel cache; consumers re-derive the
-    column-pruned closed-form calibration projection) is bit-identical to
-    'hybrid' on every output."""
-    import pandas as pd
-
-    from tests.fixtures_images import images_long_df, make_image
-
-    pixels = images_long_df(
-        spark, [("synth", 0, make_image(CONTROLS, seq=0))]
-    ).persist()
-    pixels.count()
-    outs = {}
-    for mode in ("hybrid", "hybrid-nopx"):
-        res = run_image_plan(
-            pixels, None, CONTROLS, gradient_stage=True, barrier=mode
-        )
-        outs[mode] = {
-            "integrals": res.integrals.orderBy("kind", "tth_idx").toPandas(),
-            "spottiness": res.spottiness.orderBy("qbin").toPandas(),
-            "outliers": res.outliers.orderBy("y", "x").toPandas(),
-        }
-        res.unpersist_all()
-    for name in outs["hybrid"]:
-        pd.testing.assert_frame_equal(
-            outs["hybrid"][name].reset_index(drop=True),
-            outs["hybrid-nopx"][name].reset_index(drop=True),
-            check_exact=True,
-        )
-    pixels.unpersist()
-
-
 def test_empty_batch_eager_plan_builds(spark):
-    """Round-7 review: an empty pixel frame under an eager barrier yields
+    """Round-7 review: an empty pixel frame under the eager barriers yields
     n_images=0 — the h-maxima feed's explicit repartition must not be
     built with 0 partitions (plan-construction crash). Empty in, empty
     out, no exception."""
@@ -300,9 +259,7 @@ def test_empty_batch_eager_plan_builds(spark):
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     ).where(F.lit(False))
     calib = build_calib_pixels(spark, CONTROLS)
-    res = run_image_plan(
-        empty, calib, CONTROLS, barrier="local_checkpoint", h_maxima=True
-    )
+    res = run_image_plan(empty, calib, CONTROLS, h_maxima=True)
     assert res.h_maxima.count() == 0
     assert res.integrals.count() == 0
     res.unpersist_all()
@@ -391,7 +348,7 @@ def test_closed_form_calib_matches_calib_table(spark):
     calib.count()
     outs = {}
     for name, cal in (("table", calib), ("closed", None)):
-        res = run_image_plan(pixels, cal, CONTROLS, barrier="hybrid")
+        res = run_image_plan(pixels, cal, CONTROLS)
         outs[name] = {
             "lpx": res.labeled_pixels.orderBy("y", "x")
             .select("image_id", "y", "x", "label", "q", "azim",
@@ -440,14 +397,15 @@ def test_warmup_job_submitted_once_per_session(spark, monkeypatch):
     ip._WARMUP_SUBMITTED.clear()
 
     # warmup gate needs >= 4 Mpx: a 2048^2 controls clone trips it; the
-    # plan is only BUILT (never materialized), so no heavy work happens —
-    # the thread submission happens at plan-build time
+    # barriers run over the small fixture image's pixels only, so no
+    # heavy work happens — the thread submission happens at plan-build
+    # time
     import dataclasses
     big = dataclasses.replace(CONTROLS, size_x=2048, size_y=2048)
     pixels = images_long_df(spark, [("synth", 0, make_image(CONTROLS, seq=0))])
     for _ in range(3):
         res = run_image_plan(
-            pixels, None, big, gradient_stage=True, barrier="hybrid",
+            pixels, None, big, gradient_stage=True,
             n_images=1, h_maxima=True,
         )
         res.unpersist_all()

@@ -239,7 +239,7 @@ def test_fused_integrals_spottiness_one_scan(spark):
         spark, [("synth", 0, make_image(CONTROLS, seq=0))]
     ).persist()
     pixels.count()
-    res = run_image_plan(pixels, None, CONTROLS, barrier="hybrid")
+    res = run_image_plan(pixels, None, CONTROLS)
 
     fused_plan = _plan(res.fused_bins)
     assert fused_plan.count("Expand") == 0  # checkpointed: plan truncated

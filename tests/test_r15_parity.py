@@ -98,6 +98,69 @@ def test_quantized_self_dot_vectorized_matches_expression(edge_vectors):
     assert sorted(old.collect()) == sorted(new.collect())
 
 
+@pytest.fixture(scope="module")
+def irregular_vectors(spark):
+    """Rows a dense np.stack cannot take (NULL or ragged vectors) or that
+    carry a NULL element, between regular ones so each Arrow batch mixes
+    both. ``b`` is a second vector column for the two-argument dot."""
+    rng = np.random.default_rng(1508)
+
+    def vec(n: int) -> list:
+        return [float(x) for x in (rng.standard_normal(n) * 3).astype(np.float32)]
+
+    with_null = vec(DIM)
+    with_null[3] = None
+    odd = [
+        None,                      # NULL vector
+        with_null,                 # one NULL element
+        [None] * DIM,              # every element NULL
+        vec(DIM - 3),              # short
+        vec(DIM + 2),              # long
+        [],                        # empty
+    ]
+    rows = []
+    for i in range(24):
+        a = odd[i // 2] if i % 2 and i // 2 < len(odd) else vec(DIM)
+        b = [None, vec(DIM), vec(DIM - 1)][i % 3] if i % 4 == 3 else vec(DIM)
+        rows.append((i, a, b))
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, b array<float>"
+    )
+
+
+def test_vectorized_udfs_match_folds_on_null_and_ragged_rows(
+    irregular_vectors,
+):
+    """NULL vectors, NULL elements and ragged lengths get the fold's own
+    output from every vectorized UDF, instead of failing the batch:
+    NULL dots, the all-'0' LSH bucket, and IVF's (NULL, lowest cell)."""
+    df = irregular_vectors.coalesce(1)  # one Arrow batch, mixed rows
+    emb = F.col("embedding")
+    cents = [(0, [0.5] * DIM), (3, [-1.0] * DIM), (7, [2.0] + [0.0] * (DIM - 1))]
+    old = df.select(
+        "vec_id",
+        sim.quantized_dot(emb, emb).alias("self"),
+        sim.quantized_dot(emb, F.col("b")).alias("pair"),
+        sim.lsh_bucket_expr(emb, 6, DIM).alias("bucket"),
+        sim.ivf_assign_expr(emb, cents).alias("ivf"),
+    ).select("vec_id", "self", "pair", "bucket", "ivf.dist", "ivf.cell")
+    new = df.select(
+        "vec_id",
+        sim.quantized_self_dot_vectorized(emb).alias("self"),
+        sim.quantized_dot_vectorized(emb, F.col("b")).alias("pair"),
+        sim.lsh_bucket_vectorized(6, DIM)(emb).alias("bucket"),
+        sim.ivf_assign_vectorized(cents)(emb).alias("ivf"),
+    ).select("vec_id", "self", "pair", "bucket", "ivf.dist", "ivf.cell")
+    want = sorted(old.collect())
+    assert sorted(new.collect()) == want
+    # the fixture exercises every fold outcome it claims to
+    assert any(r["self"] is None for r in want)
+    assert any(r["pair"] is None for r in want)
+    assert any(r["dist"] is None and r["cell"] == 0 for r in want)
+    assert any(r["bucket"] == "000000" and r["dist"] is None for r in want)
+    assert sum(r["dist"] is not None for r in want) >= 12
+
+
 def test_csim_packed_layout_matches_unpacked(spark):
     """cosine_similarity_series ships (seq, intensity) as one packed long
     when both are non-nullable ints (round 15); the packed and unpacked

@@ -52,16 +52,30 @@ def test_hist_matches_array_route_exactly(spark):
 
 
 def test_flag_outliers_histogram_flags_same_rows(spark):
+    """flag_outliers (histogram route) flags exactly the rows the array
+    route's stats flag."""
+    from pyspark.sql import functions as F
+
+    from xrddatapipeline_spark.operators.ring_stats import MAD_SCALE
+
     pdf = _random_groups(11)
     df = spark.createDataFrame(pdf)
+    stats = group_median_mad(df, ["grp"], "val", min_count=5)
     base = (
-        flag_outliers(df, ["grp"], "val", esd_mul=3.0, min_count=5)
+        df.join(F.broadcast(stats), ["grp"], "left")
+        .withColumn(
+            "is_outlier",
+            F.coalesce(
+                F.abs(F.col("val") - F.col("med"))
+                > F.col("mad") * F.lit(3.0 * MAD_SCALE),
+                F.lit(False),
+            ),
+        )
         .select("grp", "val", "is_outlier")
         .toPandas().sort_values(["grp", "val"]).reset_index(drop=True)
     )
     hist = (
-        flag_outliers(df, ["grp"], "val", esd_mul=3.0, min_count=5,
-                      histogram=True)
+        flag_outliers(df, ["grp"], "val", esd_mul=3.0, min_count=5)
         .select("grp", "val", "is_outlier")
         .toPandas().sort_values(["grp", "val"]).reset_index(drop=True)
     )

@@ -93,7 +93,6 @@ def flag_outliers(
     value: str,
     esd_mul: float = 3.0,
     min_count: int = 10,
-    histogram: bool = False,
 ) -> DataFrame:
     """Join ring stats back and flag ``|v - med| > esd_mul * 1.4826 * mad``.
 
@@ -101,12 +100,18 @@ def flag_outliers(
     Adds columns ``med, mad, n_px, is_outlier``; rows in skipped groups
     (fewer than min_count) keep ``is_outlier = false`` with null stats.
     The stats side is ~one row per ring — always a broadcast join.
-    ``histogram=True`` picks the (key, value)-histogram route for
-    integer-valued measurements (see `group_median_mad_hist`).
+
+    The stats come from the (key, value)-histogram route
+    (`group_median_mad_hist`), lockstep-equal to `group_median_mad`
+    (tests/test_ring_stats_hist.py). Its shuffle carries ~35-65x fewer
+    rows for quantized detector counts (continuous doubles degenerate to
+    about one row per pixel, still exact); measured at 8 x 2880^2 / 2500 rings / local[32] under the
+    serialized-sort shuffle writer, alternating A/B: histogram median
+    11.8 s vs array 39.2 s per batch pass, histogram faster on every
+    pairwise rep.
     """
     keys = list(keys)
-    mm = group_median_mad_hist if histogram else group_median_mad
-    stats = mm(df, keys, value, min_count=min_count)
+    stats = group_median_mad_hist(df, keys, value, min_count=min_count)
     out = df.join(F.broadcast(stats), keys, "left")
     thresh = F.col("mad") * F.lit(esd_mul * MAD_SCALE)
     return out.withColumn(

@@ -34,6 +34,51 @@ from pyspark.sql.types import LongType
 QSCALE = float(2 ** 40)  # quantization scale for order-independent dot sums
 
 
+def _stack_rows(v: pd.Series, dim: int) -> np.ndarray:
+    """One Arrow batch of ``array<float>`` vectors as an (n, dim) float64
+    matrix.
+
+    The expression folds zip each vector with a ``dim``-wide partner, so
+    a NULL vector, a vector of another length (zip_with pads the shorter
+    side with NULL) and a NULL element (NaN after the Arrow conversion)
+    all make the fold's sum NULL. Such rows come back holding NaN, and
+    NaN propagates through every quantized sum below exactly where the
+    fold's NULL did. A batch of full-width vectors takes the one
+    ``np.stack``."""
+    vals = v.to_numpy()
+    try:
+        mat = np.stack(vals).astype(np.float64)
+        if mat.ndim == 2 and mat.shape[1] == dim:
+            return mat
+    except (ValueError, TypeError):  # NULL or ragged rows
+        pass
+    mat = np.full((len(vals), dim), np.nan)
+    for i, x in enumerate(vals):
+        if x is not None and len(x) == dim:
+            mat[i] = x
+    return mat
+
+
+def _nullable_longs(q: np.ndarray) -> pd.Series:
+    """Integer-valued float64 sums as int64, NaN (a NULL fold) as NULL."""
+    bad = np.isnan(q)
+    if not bad.any():
+        return pd.Series(q.astype(np.int64))
+    out = pd.Series(np.where(bad, 0.0, q).astype(np.int64), dtype="Int64")
+    out[bad] = pd.NA
+    return out
+
+
+def _qdot_row(x, y) -> float:
+    """`quantized_dot(x, y)` of one row pair as a float64 sum (NaN where
+    the fold is NULL: a NULL side or unequal lengths)."""
+    if x is None or y is None or len(x) != len(y):
+        return np.nan
+    xa = np.asarray(x, dtype=np.float64)
+    ya = np.asarray(y, dtype=np.float64)
+    return float(np.floor(xa * ya * QSCALE).sum())
+
+
 # DataType instance (not a DDL string): the UDF is defined at import time,
 # before any SparkSession exists to parse DDL
 @pandas_udf(LongType())
@@ -41,11 +86,17 @@ def quantized_dot_vectorized(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-vectorized quantized dot: numpy computes the SAME integers as
     `quantized_dot` (float64 products of float32 pairs are exact; floor of
     values < 2^53 is exact; the integer-valued float64 sum stays < 2^53),
-    ~100x faster than the interpreted fold on all-pairs workloads."""
-    va = np.stack(a.to_numpy()).astype(np.float64)
-    vb = np.stack(b.to_numpy()).astype(np.float64)
-    q = np.floor(va * vb * QSCALE).sum(axis=1)
-    return pd.Series(q.astype(np.int64))
+    ~100x faster than the interpreted fold on all-pairs workloads. NULL
+    where the fold is NULL: a NULL vector or element, or unequal lengths."""
+    try:
+        va = np.stack(a.to_numpy()).astype(np.float64)
+        vb = np.stack(b.to_numpy()).astype(np.float64)
+        if va.shape != vb.shape:
+            raise ValueError("unequal vector lengths")
+        q = np.floor(va * vb * QSCALE).sum(axis=1)
+    except (ValueError, TypeError):  # empty, NULL or ragged rows
+        q = np.array([_qdot_row(x, y) for x, y in zip(a, b)], dtype=np.float64)
+    return _nullable_longs(q)
 
 
 @pandas_udf(LongType())
@@ -53,12 +104,14 @@ def quantized_self_dot_vectorized(a: pd.Series) -> pd.Series:
     """`quantized_dot_vectorized(v, v)` with the vector crossing the Arrow
     boundary ONCE (a two-arg call ships both argument columns, so the
     self-dot would ship the embedding twice). Same integers as
-    `quantized_dot(v, v)` by the argument above."""
-    if not len(a):
-        return pd.Series([], dtype=np.int64)
-    va = np.stack(a.to_numpy()).astype(np.float64)
-    q = np.floor(va * va * QSCALE).sum(axis=1)
-    return pd.Series(q.astype(np.int64))
+    `quantized_dot(v, v)` by the argument above, including its NULLs (a
+    NULL vector or element); a vector of any length has a self-dot."""
+    try:
+        va = np.stack(a.to_numpy()).astype(np.float64)
+        q = np.floor(va * va * QSCALE).sum(axis=1)
+    except (ValueError, TypeError):  # empty, NULL or ragged rows
+        q = np.array([_qdot_row(x, x) for x in a], dtype=np.float64)
+    return _nullable_longs(q)
 
 
 def lsh_bucket_vectorized(num_planes: int, dim: int):
@@ -71,7 +124,9 @@ def lsh_bucket_vectorized(num_planes: int, dim: int):
     a power-of-two scale; floor exact; 64 integer-valued terms < 2^47
     each sum to < 2^53), so the >= 0 sign bits — and the '0'/'1' string —
     match the expression fold bit for bit (pinned by
-    tests/test_r15_parity.py)."""
+    tests/test_r15_parity.py). A row the fold cannot sum (NULL vector or
+    element, length != dim) fails every ``>= 0`` test there, so its
+    bucket is all '0'; the NaN rows of `_stack_rows` give the same."""
     wmat = np.asarray(hyperplane_matrix(num_planes, dim), dtype=np.float64)
 
     from pyspark.sql.types import StringType
@@ -80,7 +135,7 @@ def lsh_bucket_vectorized(num_planes: int, dim: int):
     def _bucket(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype=object)
-        mat = np.stack(v.to_numpy()).astype(np.float64)
+        mat = _stack_rows(v, dim)
         bits = np.empty((len(mat), num_planes), dtype=np.uint8)
         for p in range(num_planes):
             q = np.floor(mat * wmat[p][None, :] * QSCALE).sum(axis=1)
@@ -95,7 +150,8 @@ def lsh_bucket_vectorized(num_planes: int, dim: int):
     # TWICE per side (guide §4.4 — two ArrowEvalPython nodes per scan,
     # observed in the r15 plan). The function is pure, so marking it
     # non-deterministic only forbids that duplication; one Arrow pass per
-    # side remains (plans/r15/ann_lsh_bucketed_after.txt).
+    # side remains (count the ArrowEvalPython nodes in the explain of
+    # ann_lsh_bucketed).
     return _bucket.asNondeterministic()
 
 
@@ -109,7 +165,10 @@ def ivf_assign_vectorized(centroids: "list[tuple[int, list[float]]]"):
     < 2^53, cast to int64 BEFORE the dist combination so qx - 2*qd +
     qnorm never rounds), and np.argmin's first-minimum tie-break equals
     F.array_min's (dist, cell) struct order because `centroids` is
-    cell-ascending by construction (ivf_centroids enumerates). Pinned by
+    cell-ascending by construction (ivf_centroids enumerates). A row the
+    fold cannot sum (NULL vector or element, length != the centroids')
+    has a NULL dist to every centroid; array_min then keeps the lowest
+    cell, so the result is (NULL, cells[0]) there. Pinned by
     tests/test_r15_parity.py."""
     cmat = np.asarray([v for _, v in centroids], dtype=np.float64)
     cells = np.asarray([c for c, _ in centroids], dtype=np.int64)
@@ -123,8 +182,13 @@ def ivf_assign_vectorized(centroids: "list[tuple[int, list[float]]]"):
         if not len(v):
             return pd.DataFrame({"dist": pd.Series([], dtype=np.int64),
                                  "cell": pd.Series([], dtype=np.int32)})
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        qx = np.floor(mat * mat * QSCALE).sum(axis=1).astype(np.int64)
+        mat = _stack_rows(v, cmat.shape[1])
+        qxf = np.floor(mat * mat * QSCALE).sum(axis=1)
+        bad = np.isnan(qxf)
+        if bad.any():
+            mat[bad] = 0.0
+            qxf[bad] = 0.0
+        qx = qxf.astype(np.int64)
         d = np.empty((len(mat), len(cells)), dtype=np.int64)
         for j in range(len(cells)):
             qd = (
@@ -134,11 +198,13 @@ def ivf_assign_vectorized(centroids: "list[tuple[int, list[float]]]"):
             )
             d[:, j] = qx - 2 * qd + cnorm[j]
         best = np.argmin(d, axis=1)
+        dist = pd.Series(d[np.arange(len(mat)), best])
+        if bad.any():
+            best[bad] = 0
+            dist = dist.astype("Int64")
+            dist[bad] = pd.NA
         return pd.DataFrame(
-            {
-                "dist": d[np.arange(len(mat)), best],
-                "cell": cells[best].astype(np.int32),
-            }
+            {"dist": dist, "cell": cells[best].astype(np.int32)}
         )
 
     # same §4.4 duplication guard as lsh_bucket_vectorized: the extracted

@@ -26,7 +26,6 @@ one-shuffle discipline as the rest of the per-image plan.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -167,10 +166,10 @@ def second_gradients(
 def resolve_band_rows(height: int, n_images: int | None = None) -> int:
     """Band height for the fused gradient kernel.
 
-    Default 512 (6 bands at 2880^2). ``XRDSPARK_GRAD_BAND_ROWS`` overrides
-    for same-session A/B runs.
+    512 rows (6 bands at 2880^2); callers that need another height pass
+    ``band_rows`` to ``fused_gradient_inputs``.
 
-    Round-10 A/B (scripts/ab_gradband_r10.py, 8 x 2880^2, two sessions,
+    Round-10 A/B (8 x 2880^2, two sessions,
     order-rotated, min-of-3): wave packing does NOT move the steady state
     — 720 rows (4 bands x 8 images = exactly one 32-core wave) min
     gf-run 197.0 core-s, 512 (1.5 waves) 189.8, 360 (2 waves) 193.8;
@@ -180,9 +179,6 @@ def resolve_band_rows(height: int, n_images: int | None = None) -> int:
     under the <= 2 bar — the Python kernel time the JVM thread waits on
     IS the compute, and it's ~60 core-s over 192 tasks once the scratch
     pool is warm. 512 stays the default."""
-    env = os.environ.get("XRDSPARK_GRAD_BAND_ROWS")
-    if env:
-        return max(2 * _GRAD_HALO + 1, int(env))
     return 512
 
 
@@ -275,28 +271,8 @@ def fused_gradient_inputs(
     # kernel, identical values leave it (banded==whole / fused==dense
     # bit-equality tests pin the path).
     def _band(key, px_tbl, lpx_tbl):
-        import os as _os
-        import sys as _sys
-        import time as _time
-
         import pyarrow as pa
 
-        _timing = bool(_os.environ.get("XRDSPARK_KERNEL_TIMING"))
-        # kernel-side fixed-work canary (round 15, r14 verdict #2): the
-        # JVM-side px canary cannot see Python-worker contention, so the
-        # grad_fused blow-ups (78-95 vs 344-881 run core-s at px canary
-        # 1.0) were unattributable. A fixed ~8 MB scratch-pool memset +
-        # read (the kernel's own access pattern) timed per call makes a
-        # memory-stalled worker read hot in the KT line (calm: ~2-3 ms).
-        _canary = None
-        if _timing:
-            _cb = kernels.scratch((4, w), "band_canary", dtype=np.float64)
-            _tc = _time.perf_counter()
-            for _ in range(90):
-                _cb[:] = 1.0
-                _canary_sum = float(_cb[0, 0]) + float(_cb[-1, -1])
-            _canary = _time.perf_counter() - _tc
-        _t0 = _time.perf_counter()
         image_id = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
         band = int(key[1].as_py() if hasattr(key[1], "as_py") else key[1])
         y0, y1 = max(band * bh - halo, 0), min((band + 1) * bh + halo, h)
@@ -337,7 +313,6 @@ def fused_gradient_inputs(
         bad[:] = True
         img[ys - y0, xs] = inten
         bad[ys - y0, xs] = False  # shipped rows are exactly the unmasked
-        _t1 = _time.perf_counter()
         # sparse normalized convolution: num/den only at bad pixels — no
         # full-raster inpaint buffers (bit-identical to the dense route)
         inp = kernels.inpaint_masked_sparse(
@@ -364,7 +339,6 @@ def fused_gradient_inputs(
         # candidate multiset = the dense frame's values over this band's
         # CORE rows — every raster position is a pixel row, so slice the
         # raster directly instead of indexing by shipped coordinates
-        _t2 = _time.perf_counter()
         r2v = r2[core0 - y0 : core1 - y0].ravel()
         a2v = a2[core0 - y0 : core1 - y0].ravel()
 
@@ -414,15 +388,6 @@ def fused_gradient_inputs(
                 "is_summary": pa.array(issum_out),
             }
         )
-        if _timing:
-            print(
-                f"KT band={image_id}/{band} rows={px_tbl.num_rows} "
-                f"canary={_canary:.4f} "
-                f"unpack={_t1 - _t0:.2f} conv={_t2 - _t1:.2f} "
-                f"emit={_time.perf_counter() - _t2:.2f} pid={_os.getpid()}",
-                file=_sys.stderr,
-                flush=True,
-            )
         return result
 
     yb, bands = _band_membership(bh, halo, n_bands)
@@ -452,43 +417,23 @@ def fused_gradient_inputs(
     # leaves img's zeros in place), so bit-identity to np.percentile holds.
     # Image list comes from lpx (tiny): an image with no labeled pixels has
     # no threshold consumers, so its summary rows are never read.
-    # XRDSPARK_GRAD_SENTINEL=0 disables the union for same-session A/B
-    # perf runs ONLY (it re-introduces the fully-masked-band correctness
-    # hole the sentinel closes — never set it in production). Because a
-    # leaked env var would reopen the round-4 hole INVISIBLY at plan-build
-    # time, disabling it is loud: a RuntimeWarning every time a plan is
-    # built with the sentinel off.
-    import os as _os_mod
-
-    if _os_mod.environ.get("XRDSPARK_GRAD_SENTINEL", "1") == "0":
-        import warnings
-
-        warnings.warn(
-            "XRDSPARK_GRAD_SENTINEL=0: gradient-stage sentinel rows are "
-            "DISABLED — fully-masked bands will silently drop their "
-            "summary row (wrong percentile thresholds). This switch exists "
-            "only for same-session A/B perf runs; unset it in production.",
-            RuntimeWarning,
-            stacklevel=3,
+    sent = (
+        lpx.select("image_id")
+        .distinct()
+        .select(
+            "image_id",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(n_bands - 1))
+            ).alias("band"),
         )
-    else:
-        sent = (
-            lpx.select("image_id")
-            .distinct()
-            .select(
-                "image_id",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_bands - 1))
-                ).alias("band"),
+    )
+    for fld in src.schema.fields:
+        if fld.name not in ("image_id", "band"):
+            default = -1 if fld.name in ("p", "y", "x") else 0
+            sent = sent.withColumn(
+                fld.name, F.lit(default).cast(fld.dataType)
             )
-        )
-        for fld in src.schema.fields:
-            if fld.name not in ("image_id", "band"):
-                default = -1 if fld.name in ("p", "y", "x") else 0
-                sent = sent.withColumn(
-                    fld.name, F.lit(default).cast(fld.dataType)
-                )
-        src = src.unionByName(sent.select(*src.columns))
+    src = src.unionByName(sent.select(*src.columns))
     lsrc = lpx.select("image_id", "y", "x").withColumn("band", yb)
     if n_images is not None:
         src, lsrc = _balanced_group_partitions(
@@ -579,7 +524,7 @@ class GradientStageResult:
     pixel_flags: DataFrame   # (image_id, y, x, label, new_spot, new_arc)
     on_arc_labels: DataFrame  # (image_id, label, p20_r2, on_arc)
     grad_clusters: DataFrame  # (image_id, newlabel, parent_label, med_azim, n_px)
-    # frames persisted by gradient_classify; the caller (or
+    # frames checkpointed by gradient_classify; the caller (or
     # ImagePlanResult.unpersist_all) drops them after the batch is written
     cached: tuple = ()
 
@@ -589,7 +534,7 @@ def gradient_classify(
     lpx: DataFrame,
     label_table: DataFrame,
     controls: ImageControls,
-    barrier_fn=None,
+    barrier_fn,
     sparse_hint=None,
     n_images: int | None = None,
 ) -> GradientStageResult:
@@ -599,19 +544,18 @@ def gradient_classify(
     pixels with (q, azim); ``label_table``: shape-classifier output with
     (area, diff_azim, diff_q, classifier).
 
-    ``barrier_fn`` (default ``persist``) materializes the fused kernel
-    output; run_image_plan passes its eager-checkpoint barrier so the
-    kernel provably runs ONCE — a lazy persist lets two consumer branches
-    of the same job race the cache and compute the kernel twice (measured
-    at 8 x 2880^2: two full shuffle+kernel stage pairs).
+    ``barrier_fn(df, label=...)`` materializes the fused kernel output
+    and the two small per-image frames; run_image_plan passes its eager
+    checkpoint barrier so the kernel provably runs ONCE — a lazy persist
+    lets two consumer branches of the same job race the cache and compute
+    the kernel twice (measured at 8 x 2880^2: two full shuffle+kernel
+    stage pairs).
 
     ``sparse_hint`` (default identity) wraps the SPARSE side of joins —
     run_image_plan passes ``F.broadcast`` under its checkpoint barrier,
     where LogicalRDD stats are unknown to AQE.
     """
     shape = (controls.size_y, controls.size_x)
-    if barrier_fn is None:
-        barrier_fn = lambda df, label="": df.persist()  # noqa: E731
     if sparse_hint is None:
         sparse_hint = lambda df: df  # noqa: E731
     # ONE banded kernel pass emits only the labeled-pixel gradients plus

@@ -32,25 +32,6 @@ from xrddatapipeline_spark.functions.binning import tth_bin_center
 from xrddatapipeline_spark.operators.ring_stats import flag_outliers
 from xrddatapipeline_spark.operators.raster import close_mask_pixels, label_pixels
 
-#: ring outlier stage: histogram (per distinct intensity) vs array (per
-#: pixel) order-stat route. Lockstep-tested exactly equal; the histogram
-#: shuffle carries ~35-65x fewer rows for quantized detector counts
-#: (exchange metrics pinned in tests/test_ring_stats_hist.py).
-#: History: an earlier A/B (pre-round-14) read the histogram route ~10%
-#: SLOWER locally and defaulted to array — but that measurement ran under
-#: BypassMergeSortShuffleWriter (pathologically slow on this host, fixed
-#: by bypassMergeThreshold=1 in session.py), which swamped the per-row
-#: shuffle cost the histogram route removes. Re-measured round 14 under
-#: the serialized-sort writer at 8 x 2880^2 / 2500 rings / local[32]
-#: (scripts/ab_outlier_route_r14.py, alternating A/B): histogram median
-#: 11.8 s vs array 39.2 s per batch pass — histogram wins EVERY pairwise
-#: rep, so it is now the default on both local and cluster (where the
-#: row win only grows — the shuffle crosses a network).
-#: Env override XRDSPARK_OUTLIER_HISTOGRAM=1/0 for A/B runs.
-import os as _os
-
-OUTLIER_HISTOGRAM = _os.environ.get("XRDSPARK_OUTLIER_HISTOGRAM", "1") == "1"
-
 #: (applicationId, shapes, stage-set) keys whose kernel-scratch warmup job
 #: has already been submitted this process — python workers persist across
 #: batches within a session, so one warmup per session covers them all and
@@ -214,7 +195,6 @@ def outlier_pixels(
             value="intensity",
             esd_mul=esd_mul,
             min_count=10,
-            histogram=OUTLIER_HISTOGRAM,
         )
     else:
         flagged = flag_outliers(
@@ -223,9 +203,6 @@ def outlier_pixels(
             value="intensity",
             esd_mul=esd_mul,
             min_count=10,
-            # see OUTLIER_HISTOGRAM: histogram route by default (map-side
-            # combined (ring, intensity) counts — exact for integer counts)
-            histogram=OUTLIER_HISTOGRAM,
         )
     return flagged.where(F.col("is_outlier")).select("image_id", "y", "x")
 
@@ -873,7 +850,7 @@ def h_maxima_per_qbin(
         )
     else:
         src = px.select("image_id", "y", "x", "intensity", *qbin_cols)
-    # n_images may legitimately be 0 (empty batch under an eager barrier):
+    # n_images may legitimately be 0 (an empty batch):
     # repartition(0) is an error, and there is nothing to balance anyway
     if n_images and 0 < 4 * n_images <= 4096:
         src = src.repartition(4 * n_images, "image_id")
@@ -1108,7 +1085,7 @@ class ImagePlanResult:
                 f.result()
 
     def unpersist_all(self) -> None:
-        """Drop every frame the plan persisted (call after the batch's
+        """Drop every frame the plan checkpointed (call after the batch's
         outputs are written — the streaming sink does this per batch)."""
         # om_pixels is a projection of the labeled_pixels barrier since the
         # round-14 M2+M1 fusion — releasing labeled_pixels frees it
@@ -1131,7 +1108,6 @@ def run_image_plan(
     broadcast_calib: bool = True,
     gradient_stage: bool = False,
     observe: bool = False,
-    barrier: str = "persist",
     corrections: dict | None = None,
     sparse_broadcast_rows: int = 4_000_000,
     n_images: int | None = None,
@@ -1139,9 +1115,12 @@ def run_image_plan(
 ) -> ImagePlanResult:
     """Full per-image plan (pipeline.py:78-504 equivalent).
 
-    NOTE: with ``barrier="local_checkpoint"`` (the streaming default) plan
-    construction is EAGER — five intermediates materialize as Spark jobs
-    before this function returns; ``barrier="persist"`` keeps it lazy.
+    Plan construction is EAGER: the shared intermediates (px, outliers,
+    lpx, label_table, intspot and the gradient stage's frames) are
+    barriers — each materializes as a Spark job, as an eager
+    ``localCheckpoint`` in serialized row storage, before this function
+    returns. Release them with ``ImagePlanResult.unpersist_all`` once the
+    outputs are written.
 
     ``corrections`` (optional) is a kwargs dict for
     ``operators.corrections.apply_correction_images`` (dark / background /
@@ -1153,25 +1132,18 @@ def run_image_plan(
     (plans.gradient_stage): the spot/arc pixel sets fed to the integrals
     become the refined new_spot/new_arc flags (classification.py:587-606).
 
-    ``barrier`` picks the reuse boundary for the five shared intermediates:
-    "persist" keeps full lineage (fault-tolerant; any lost partition
-    recomputes); "local_checkpoint" ALSO truncates lineage; "hybrid"
-    (eager like local_checkpoint) keeps the two DENSE frames (pixel table,
-    gradient raster) as eager COLUMNAR caches — pruned compressed re-scans
-    for their 4-6 consumers — and checkpoints only the sparse frames. The plan is
-    deep, and classic Spark re-analyzes the whole upstream plan on every
-    transformation AND per output job, a driver-side cost independent of
-    pixel count; checkpointed barriers make every downstream plan shallow.
-    Measured warm steady-state per image on local[32]: 1 Mpx 40-48 s
-    (persist) vs 9-11 s (local_checkpoint); single 8.3 Mpx ~par (22-39 s
-    vs 26-28 s); 8-image 8.3 Mpx batches 15.9 s/img (persist) vs
-    12.7-14.5 s/img (checkpoint, serialized storage). Executor loss under
-    local_checkpoint costs the whole image — the right trade under
-    foreachBatch, which retries the batch anyway."""
+    Why checkpoints: the plan is deep, and classic Spark re-analyzes the
+    whole upstream plan on every transformation AND per output job, a
+    driver-side cost independent of pixel count; a checkpoint truncates
+    the lineage, so every downstream plan stays shallow. Measured warm
+    steady-state per image on local[32]: 1 Mpx 40-48 s (lazy persist) vs
+    9-11 s (checkpoint); 8-image 8.3 Mpx batches 15.9 s/img (persist) vs
+    12.7-14.5 s/img (checkpoint). At 512^2 on 4 cores the checkpoint also
+    beat a columnar cache of the dense frames (3.89 s vs 4.31 s, persist
+    4.55 s). A lost executor costs the whole batch's intermediates — the
+    right trade under foreachBatch, which retries a failed micro-batch
+    wholesale anyway."""
     shape = (controls.size_y, controls.size_x)
-    if barrier not in ("persist", "local_checkpoint", "hybrid", "hybrid-nopx"):
-        raise ValueError(f"unknown barrier {barrier!r}")
-    eager = barrier in ("local_checkpoint", "hybrid", "hybrid-nopx")
     if corrections:
         from xrddatapipeline_spark.operators.corrections import (
             apply_correction_images,
@@ -1179,13 +1151,8 @@ def run_image_plan(
 
         pixels = apply_correction_images(pixels, **corrections)
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
     if (
-        eager
-        and (gradient_stage or h_maxima)
+        (gradient_stage or h_maxima)
         and controls.size_y * controls.size_x >= 4_000_000
     ):
         # pre-fault the kernel scratch sets across the python worker pool
@@ -1271,79 +1238,27 @@ def run_image_plan(
                 target=_warm, daemon=True, name="kernel-warmup"
             ).start()
 
-    _bt = bool(_os.environ.get("XRDSPARK_BARRIER_TIMING"))
-    _bt_last = [_time.perf_counter()]
+    from pyspark.storagelevel import StorageLevel
 
-    def _bar(df: DataFrame, dense: bool = False, label: str = "") -> DataFrame:
-        if _bt:
-            _t0 = _time.perf_counter()
-            print(
-                f"BT {label or '?'} plan-build {_t0 - _bt_last[0]:.2f}s",
-                file=_sys.stderr, flush=True,
-            )
-            try:
-                return _bar_labeled(df, dense, label)
-            finally:
-                _bt_last[0] = _time.perf_counter()
-                print(
-                    f"BT {label or '?'} dense={dense} "
-                    f"materialize {_bt_last[0] - _t0:.2f}s",
-                    file=_sys.stderr, flush=True,
-                )
-        return _bar_labeled(df, dense, label)
-
-    def _bar_labeled(df: DataFrame, dense: bool, label: str) -> DataFrame:
-        # name the barrier's stages in the Spark UI / REST profile: the
-        # round-7/8 profiles showed three big "localCheckpoint at
-        # <unknown>" stages that could not be attributed to a frame.
-        # callSite.short is a thread-local property the scheduler copies
-        # into the stage name of jobs submitted while it is set.
+    def _bar(df: DataFrame, label: str) -> DataFrame:
+        # serialized-row checkpoint: truncates the deep lineage tail (ring
+        # stats, raster kernels) out of every downstream plan analysis.
+        # Serialized rows: the default deserialized level OOMs a 16 GB
+        # heap at 8 x 8.3 Mpx (object-graph overhead).
+        # The label names the barrier's stages in the Spark UI / REST
+        # profile (the round-7/8 profiles showed three big
+        # "localCheckpoint at <unknown>" stages that could not be
+        # attributed to a frame). callSite.short is a thread-local
+        # property the scheduler copies into the stage name of jobs
+        # submitted while it is set.
         sc = df.sparkSession.sparkContext
-        if not label:
-            return _bar_inner(df, dense)
         sc.setLocalProperty("callSite.short", f"barrier:{label}")
         try:
-            return _bar_inner(df, dense)
+            return df.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
         finally:
             sc.setLocalProperty("callSite.short", None)
-
-    def _bar_inner(df: DataFrame, dense: bool = False) -> DataFrame:
-        if not eager:
-            return df.persist()
-        from pyspark.storagelevel import StorageLevel
-
-        if barrier == "hybrid-nopx" and dense:
-            # no dense barrier at all: every consumer re-derives the
-            # (column-pruned) closed-form calibration projection from the
-            # caller's raw pixel cache. Worth it when the calib columns are
-            # computed (calib=None) rather than joined: Catalyst prunes the
-            # trig to just the columns each consumer reads, so none of the
-            # 14-column cache build/serialize/re-scan cost is paid. With a
-            # calib JOIN the join would re-execute per consumer — keep
-            # "hybrid" there.
-            return df
-        if barrier == "hybrid" and dense:
-            # DENSE frames (the calib-joined pixel table, the gradient
-            # raster) are re-scanned by 4-6 consumers: a row-format
-            # checkpoint deserializes every 15-column row per scan
-            # (profiled ~30 s CPU/task at 8 x 2880^2 just to feed a
-            # 3-column agg). Columnar cache + eager count gives pruned,
-            # compressed re-scans AND accurate stats for AQE — the count
-            # also closes the lazy-persist race that double-ran the
-            # gradient kernel. The frame's own lineage is shallow (scan ⋈
-            # calib projections), so skipping the checkpoint costs little
-            # driver re-analysis.
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()
-            return df
-        # SPARSE frames: serialized-row checkpoint — truncates the deep
-        # lineage tail (ring stats, raster kernels) out of every
-        # downstream plan analysis. serialized rows: the default
-        # deserialized level OOMs a 16 GB heap at 8 x 8.3 Mpx
-        # (object-graph overhead).
-        return df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
 
     obs: dict[str, Observation] = {}
 
@@ -1358,9 +1273,9 @@ def run_image_plan(
         return df.observe(o, *metrics)
 
     # px (the dense calib-joined pixel table) feeds five outputs; without a
-    # persist every output re-executes the pixels ⋈ calib join. ~8.3 M rows
-    # x ~15 columns per image — a deliberate per-batch cache, dropped by the
-    # caller (streaming does this per foreachBatch).
+    # barrier every output re-executes the pixels ⋈ calib join. ~8.3 M rows
+    # x ~15 columns per image — a deliberate per-batch checkpoint, dropped
+    # by the caller (streaming does this per foreachBatch).
     # columns no plan stage reads after base-mask folding are dropped
     # BEFORE the barrier: tth is recomputed closed-form from tth_idx at
     # output time, azim_mask is folded into base_mask, azim_band is a
@@ -1415,16 +1330,15 @@ def run_image_plan(
         "corrections",
         F.count(F.lit(1)).alias("n_px"),
         F.count_if(F.col("base_mask")).alias("n_base_masked"),
-    ), dense=True, label="px")
+    ), label="px")
     # Per-batch image_id -> index map (round 14): lets the three dense
     # barrier stages key their probes/aggregations on packed longs instead
     # of (image_id STRING, ...) — see _pk_expr. ONE tiny cached-scan job
     # (it subsumes the distinct-count the gradient/h-maxima feeds already
-    # ran for n_images). Eager only: under a lazy barrier a collect here
-    # would force materialization (dump_plans relies on persist staying
-    # lazy), and the legacy 3-column joins remain correct either way.
+    # ran for n_images). Beyond 8192 px per side the packed yx no longer
+    # fits its field and the 3-column joins run instead.
     image_index = None
-    if eager and shape[0] <= 8192 and shape[1] <= 8192:
+    if shape[0] <= 8192 and shape[1] <= 8192:
         ids = sorted(
             r[0] for r in px.select("image_id").distinct().collect()
         )
@@ -1442,9 +1356,9 @@ def run_image_plan(
         ):
             image_index = {s: i for i, s in enumerate(ids)}
     # The sparse intermediates (outlier/om/labeled pixel sets, label table)
-    # feed several downstream outputs; persist them so the expensive
+    # feed several downstream outputs; checkpoint them so the expensive
     # upstream (ring stats + raster kernels) runs once, not once per output.
-    # They are ~1e4-1e5 rows per image — cheap to cache at any scale.
+    # They are ~1e4-1e5 rows per image — cheap to store at any scale.
     outliers = _bar(_obs(
         outlier_pixels(
             px, esd_mul=controls.esd_mul, image_index=image_index
@@ -1453,18 +1367,16 @@ def run_image_plan(
         F.count(F.lit(1)).alias("n_outlier_px"),
     ), label="outliers")
     # Join-strategy hint for the sparse⋈dense joins downstream (mask sets
-    # against the pixel raster). Under the checkpoint barrier the sparse
-    # frames are LogicalRDDs with UNKNOWN stats, so AQE falls back to a
-    # sort-merge join that shuffles the DENSE pixel side (measured 1.2-2 GB
-    # shuffle writes per join at 8 x 2880^2); an explicit broadcast hint on
+    # against the pixel raster). The checkpointed sparse frames are
+    # LogicalRDDs with UNKNOWN stats, so AQE falls back to a sort-merge
+    # join that shuffles the DENSE pixel side (measured 1.2-2 GB shuffle
+    # writes per join at 8 x 2880^2); an explicit broadcast hint on
     # the sparse side removes every one of those exchanges. Gated on the
     # materialized OUTLIER row count (a cheap cached scan — the barrier
     # already ran it eagerly; the 3x3 closing only grows the set by gap
     # fill, far inside the threshold's safety margin) so a pathologically
     # dense mask falls back to SMJ instead of a driver-sized broadcast.
-    # Under "persist" the frames are InMemoryRelations whose stats AQE
-    # already sees — no hint needed.
-    if eager and outliers.count() <= sparse_broadcast_rows:
+    if outliers.count() <= sparse_broadcast_rows:
         sb = F.broadcast
     else:
         sb = None
@@ -1504,7 +1416,7 @@ def run_image_plan(
     # the labeled pixel set, and spot/arc membership is the classifier (or
     # the gradient stage's refined new_spot/new_arc flags)
     grad = None
-    if (gradient_stage or h_maxima) and n_images is None and eager:
+    if (gradient_stage or h_maxima) and n_images is None:
         # cheap column-pruned count on the already-materialized px
         # barrier — lets the band-kernel and h-maxima feeds pin a balanced
         # explicit partition count (streaming callers don't know the
@@ -1513,10 +1425,6 @@ def run_image_plan(
     if gradient_stage:
         from xrddatapipeline_spark.plans.gradient_stage import gradient_classify
 
-        # plain (row-checkpoint) barrier even under "hybrid": the gradient
-        # raster has only 2 consumers (thresholds kernel, lpx join), so a
-        # columnar cache build never pays for itself there — measured
-        # 135 s/task vs ~44 s at 8 x 2880^2
         grad = gradient_classify(
             px, lpx, label_table, controls, barrier_fn=_bar, sparse_hint=sb,
             n_images=n_images,

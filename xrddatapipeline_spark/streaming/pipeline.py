@@ -71,9 +71,9 @@ def _observation_get(o, name: str, timeout_s: float = 60.0):
 
     ``get`` blocks indefinitely until some action materializes the observed
     frame. All frames the pipeline observes ARE consumed by the batch
-    writes, so this normally returns immediately — the timeout converts a
-    misconfigured barrier/observe combination (an observed frame nothing
-    materialized) from a silent stream hang into a visible warning.
+    writes, so this normally returns immediately — the timeout converts an
+    observed frame that nothing materialized (a plan bug) from a silent
+    stream hang into a visible warning.
     """
     import time
     import warnings
@@ -134,6 +134,13 @@ class StreamingImagePipeline:
 
     ``calib`` is the one-time calibration table (T2's CacheCreator analog);
     outputs land under ``out_dir/<table>`` as append-only parquet.
+
+    Each batch runs ``run_image_plan``, whose eager local checkpoints
+    truncate lineage at the plan's reuse boundaries (eager re-analysis of
+    the deep plan otherwise costs the driver ~30 s per batch). foreachBatch
+    retries a failed batch wholesale, so the fault tolerance the
+    checkpointed RDDs give up is covered one level up; the batch's
+    checkpoints are released once its outputs are written.
     """
 
     spark: SparkSession
@@ -142,13 +149,8 @@ class StreamingImagePipeline:
     out_dir: str
     broadcast_calib: bool = True
     gradient_stage: bool = False
+    # one stage_metrics row of Observation counters per batch
     observe_metrics: bool = False
-    # local_checkpoint truncates lineage at the plan's reuse boundaries:
-    # the per-image plan is deep, and eager re-analysis otherwise costs the
-    # driver ~30 s per BATCH (size-independent). foreachBatch retries a
-    # failed batch wholesale, so the lost fault-tolerance of the
-    # checkpointed RDDs is already covered one level up.
-    barrier: str = "local_checkpoint"
     # K3 viz parity: also materialize per-image `<id>_base.tif` /
     # `<id>_outliermask.tif` boolean rasters under out_dir/masks
     # (pipeline.py:152-159, 196-216) — off by default (parquet is the
@@ -318,7 +320,6 @@ class StreamingImagePipeline:
                 broadcast_calib=self.broadcast_calib,
                 gradient_stage=self.gradient_stage,
                 observe=self.observe_metrics,
-                barrier=self.barrier,
             )
             # independent sinks over the already-materialized barriers:
             # submit concurrently so stage tails of one output job overlap
@@ -378,9 +379,9 @@ class StreamingImagePipeline:
                 flat: dict[str, int] = {"batch_id": int(batch_id)}
                 for name, o in res.observations.items():
                     # Observation.get blocks until an action materializes
-                    # the observed frame; with barrier='persist' a frame no
-                    # output consumed would hang the stream forever — bound
-                    # the wait and skip (with a warning) instead of hanging.
+                    # the observed frame; an observed frame that no barrier
+                    # or output ever ran would hang the stream forever —
+                    # bound the wait and skip (with a warning) instead.
                     got = _observation_get(o, name, timeout_s=60.0)
                     if got is not None:
                         flat.update({k: int(v) for k, v in got.items()})
